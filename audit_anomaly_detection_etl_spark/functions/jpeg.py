@@ -15,7 +15,8 @@ Decoder scope (rejections are explicit ``JpegError``, never wrong pixels):
   lossless frames are refused
 - 1-component (grayscale) and 3-component (YCbCr) scans, any sampling
   factors in {1,2}x{1,2} (4:4:4, 4:2:2, 4:4:0, 4:2:0); single interleaved
-  scan; restart markers (DRI/RSTn) supported
+  scan; restart markers (DRI/RSTn) supported; RGB-coded 3-component frames
+  (component ids R,G,B or an Adobe APP14 transform of 0) are refused
 - bomb-safe like decode_png: SOF dimensions are capped at ``max_pixels``
   BEFORE any allocation, and the entropy decode is bounded by the MCU
   count the header implies
@@ -253,6 +254,7 @@ def decode_jpeg(raw: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
     huffs: dict[tuple[int, int], dict] = {}  # (class, id) -> code table
     frame = None  # (h, w, [(cid, hi, vi, tq)])
     dri = 0
+    adobe_transform = None  # APP14 color transform flag, when present
     i = 2
     n = len(raw)
     while True:
@@ -341,9 +343,18 @@ def decode_jpeg(raw: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
             if len(body) != 2:
                 raise JpegError("bad DRI")
             (dri,) = struct.unpack(">H", body)
+        elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:  # APP14
+            adobe_transform = body[11]
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise JpegError("SOS before SOF")
+            # only YCbCr is converted to RGB: a 3-component frame coded as
+            # RGB (component ids 'R','G','B', or Adobe transform=0) would
+            # decode to wrong pixels
+            if len(frame[2]) == 3 and (
+                adobe_transform == 0 or [c[0] for c in frame[2]] == list(b"RGB")
+            ):
+                raise JpegError("RGB-coded 3-component frame not supported")
             return _decode_scan(raw, i, body, frame, quant, huffs, dri)
         # else: APPn/COM/other tables — skipped
 

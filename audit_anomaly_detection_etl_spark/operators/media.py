@@ -37,16 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import codecs
-from . import remap_key_part
+from .payload import Batch, Kernel, decode_pass, decoded_violations, flag_rows
 
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_samples long, "
-    "rms double, peak double, zcr double, est_dur_ms double"
+_FEATURES_FIELDS = (
+    "decode_ok boolean, n_samples long, rms double, peak double, zcr double, "
+    "est_dur_ms double"
 )
-
-AUDIO_FEATURES_EXT_SCHEMA = AUDIO_FEATURES_SCHEMA + (
-    ", dc_offset double, clip_ratio double, silence_ratio double"
-)
+_FEATURES_EXT_FIELDS = ", dc_offset double, clip_ratio double, silence_ratio double"
 
 # int16 full scale after the /32768 decode normalization: a sample at the
 # positive rail is 32767/32768; anything at |x| >= this is a clipped sample
@@ -54,10 +51,66 @@ _CLIP_THRESHOLD = 32767.0 / 32768.0
 _SILENCE_THRESHOLD = 1e-3  # ~-60 dBFS
 
 
+def _features(b: Batch, extended: bool) -> dict:
+    n = b.n
+    decode_ok = np.zeros(n, dtype=bool)
+    n_samples = np.zeros(n, dtype=np.int64)
+    rms = np.full(n, np.nan)
+    peak = np.full(n, np.nan)
+    zcr = np.full(n, np.nan)
+    dc = np.full(n, np.nan)
+    clip_ratio = np.full(n, np.nan)
+    sil_ratio = np.full(n, np.nan)
+    for g in b.clip_groups:
+        idx, lens, seg, pcm = g.idx, g.lens, g.starts, g.f64
+        decode_ok[idx] = True
+        n_samples[idx] = lens
+        energy = np.add.reduceat(pcm**2, seg)
+        rms[idx] = np.sqrt(energy / lens)
+        peak[idx] = np.maximum.reduceat(np.abs(pcm), seg)
+        # sign changes between consecutive samples; the boundary pair
+        # between two concatenated clips must not count -> subtract a
+        # per-clip correction computed from the boundary values
+        flips = (np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).astype(np.float64)
+        # pad so reduceat segments align with per-clip [start, end)
+        flips = np.append(flips, 0.0)
+        flip_counts = np.add.reduceat(flips, seg)
+        # last flip slot of each clip pairs it with the NEXT clip: drop it
+        flip_counts -= flips[seg + lens - 1]
+        zcr[idx] = np.where(lens > 1, flip_counts / (lens - 1), 0.0)
+        if extended:
+            a = np.abs(pcm)
+            dc[idx] = np.add.reduceat(pcm, seg) / lens
+            clip_ratio[idx] = (
+                np.add.reduceat((a >= _CLIP_THRESHOLD).astype(np.float64), seg) / lens
+            )
+            sil_ratio[idx] = (
+                np.add.reduceat((a < _SILENCE_THRESHOLD).astype(np.float64), seg) / lens
+            )
+    out = {
+        "decode_ok": decode_ok,
+        "n_samples": n_samples,
+        "rms": rms,
+        "peak": peak,
+        "zcr": zcr,
+        "est_dur_ms": np.where(
+            decode_ok & (b.sr > 0), n_samples / np.maximum(b.sr, 1) * 1000.0, np.nan
+        ),
+    }
+    if extended:
+        out.update(dc_offset=dc, clip_ratio=clip_ratio, silence_ratio=sil_ratio)
+    return out
+
+
+def _features_kernel(extended: bool = False, flags=None) -> Kernel:
+    fields = _FEATURES_FIELDS + (_FEATURES_EXT_FIELDS if extended else "")
+    return Kernel("features", fields, lambda b: _features(b, extended), flags=flags)
+
+
 def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
     """Per-clip audio features from decoded PCM — one ``mapInPandas`` pass,
-    per-codec-group vectorized decode (same concatenation + ``reduceat``
-    pattern as operators/payload.py; no per-sample Python).
+    per-codec-group vectorized decode (the shared decode skeleton of
+    operators/payload.py; no per-sample Python).
 
     ``extended=True`` adds the recording-QA signals (same single pass, three
     more reduceat sums): ``dc_offset`` (mean sample — a biased ADC / bad
@@ -65,88 +118,7 @@ def audio_features(clips: DataFrame, extended: bool = False) -> DataFrame:
     hard-clipping), ``silence_ratio`` (fraction under ~-60 dBFS — dead air
     the silence-trim step should have removed).
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
-            decode_ok = np.zeros(n, dtype=bool)
-            n_samples = np.zeros(n, dtype=np.int64)
-            rms = np.full(n, np.nan)
-            peak = np.full(n, np.nan)
-            zcr = np.full(n, np.nan)
-            dc = np.full(n, np.nan)
-            clip_ratio = np.full(n, np.nan)
-            sil_ratio = np.full(n, np.nan)
-
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                decode_ok[idx] = True
-                n_samples[idx] = lens
-                energy = np.add.reduceat(pcm**2, seg)
-                rms[idx] = np.sqrt(energy / lens)
-                peak[idx] = np.maximum.reduceat(np.abs(pcm), seg)
-                # sign changes between consecutive samples; the boundary pair
-                # between two concatenated clips must not count -> subtract a
-                # per-clip correction computed from the boundary values
-                flips = (np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).astype(np.float64)
-                # pad so reduceat segments align with per-clip [start, end)
-                flips = np.append(flips, 0.0)
-                flip_counts = np.add.reduceat(flips, seg)
-                # last flip slot of each clip pairs it with the NEXT clip: drop it
-                ends = seg + lens - 1
-                flip_counts -= flips[ends]
-                zcr[idx] = np.where(lens > 1, flip_counts / (lens - 1), 0.0)
-                if extended:
-                    a = np.abs(pcm)
-                    dc[idx] = np.add.reduceat(pcm, seg) / lens
-                    clip_ratio[idx] = (
-                        np.add.reduceat((a >= _CLIP_THRESHOLD).astype(np.float64), seg)
-                        / lens
-                    )
-                    sil_ratio[idx] = (
-                        np.add.reduceat((a < _SILENCE_THRESHOLD).astype(np.float64), seg)
-                        / lens
-                    )
-
-            est_dur = np.where(
-                decode_ok & (sr_col > 0), n_samples / np.maximum(sr_col, 1) * 1000.0, np.nan
-            )
-            out = {
-                "clip_id": pdf["clip_id"].to_numpy(),
-                "part": pdf["part"].to_numpy(),
-                "decode_ok": decode_ok,
-                "n_samples": n_samples,
-                "rms": rms,
-                "peak": peak,
-                "zcr": zcr,
-                "est_dur_ms": est_dur,
-            }
-            if extended:
-                out.update(
-                    dc_offset=dc, clip_ratio=clip_ratio, silence_ratio=sil_ratio
-                )
-            yield pd.DataFrame(out)
-
-    pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    schema = AUDIO_FEATURES_EXT_SCHEMA if extended else AUDIO_FEATURES_SCHEMA
-    return pruned.mapInPandas(batches, schema=schema)
+    return decode_pass(clips, [_features_kernel(extended)])
 
 
 # ---------------------------------------------------------------------------
@@ -487,12 +459,12 @@ def wav_consistency_violations(
         F.col(codec_col).alias("_codec"),
     )
     j = meta.join(declared, "clip_id")
-    checks = [
+    checks = [  # (condition, check, severity, detail)
         (
             ~F.col("wav_ok"),
-            F.lit("wav_unparseable"),
-            F.concat(F.lit("container: "), F.coalesce(F.col("parse_error"), F.lit("?"))),
+            "wav_unparseable",
             5.0,
+            F.concat(F.lit("container: "), F.coalesce(F.col("parse_error"), F.lit("?"))),
         ),
         (
             # null-guarded like the dur check below: a NULL declared sample
@@ -504,14 +476,14 @@ def wav_consistency_violations(
                 | F.col("_sr").isNull()
                 | (F.col("container_sr") != F.col("_sr"))
             ),
-            F.lit("wav_sr_mismatch"),
+            "wav_sr_mismatch",
+            3.0,
             F.concat(
                 F.lit("table says "),
                 F.coalesce(F.col("_sr").cast("string"), F.lit("(null)")),
                 F.lit(" Hz, container says "),
                 F.coalesce(F.col("container_sr").cast("string"), F.lit("(null)")),
             ),
-            3.0,
         ),
         (
             F.col("wav_ok")
@@ -520,14 +492,14 @@ def wav_consistency_violations(
                 | F.col("_codec").isNull()
                 | (F.col("container_codec") != F.col("_codec"))
             ),
-            F.lit("wav_codec_mismatch"),
+            "wav_codec_mismatch",
+            3.0,
             F.concat(
                 F.lit("table says "),
                 F.coalesce(F.col("_codec"), F.lit("(null)")),
                 F.lit(", container says "),
                 F.coalesce(F.col("container_codec"), F.lit("(unknown tag)")),
             ),
-            3.0,
         ),
         (
             # null-guarded: a container that parses with sr=0 has a NULL
@@ -540,7 +512,8 @@ def wav_consistency_violations(
                 | F.col("_dur").isNull()
                 | (F.abs(F.col("container_dur_ms") - F.col("_dur")) > dur_tol_ms)
             ),
-            F.lit("wav_dur_mismatch"),
+            "wav_dur_mismatch",
+            2.0,
             F.concat(
                 F.lit("table says "),
                 F.coalesce(F.col("_dur").cast("string"), F.lit("(null)")),
@@ -549,30 +522,9 @@ def wav_consistency_violations(
                     F.round("container_dur_ms", 1).cast("string"), F.lit("(null)")
                 ),
             ),
-            2.0,
         ),
     ]
-    structs = F.array(
-        *[
-            F.when(cond, F.struct(check.alias("check"), detail.alias("detail"), F.lit(sev).alias("severity")))
-            for cond, check, detail, sev in checks
-        ]
-    )
-    return (
-        j.select(
-            F.col("clip_id").alias("key"),
-            F.col("part"),
-            F.explode(F.filter(structs, lambda s: s.isNotNull())).alias("v"),
-        )
-        .select(
-            "key",
-            F.col("v.check").alias("check"),
-            F.col("v.detail").alias("detail"),
-            F.col("part").cast("int").alias("part"),
-            F.col("v.severity").alias("severity"),
-        )
-        .select("key", "check", "detail", "part", "severity")
-    )
+    return flag_rows(j, checks)
 
 
 RESAMPLE_SCHEMA = (
@@ -852,9 +804,28 @@ def slice_segments(
     pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
     return pruned.mapInPandas(batches, schema=schema)
 
-
 # codecs.decode returns normalized float PCM in [-1, 1) -> full scale is 1.0
 _FULL_SCALE = 1.0
+
+
+def _loudness(c, target_dbfs: float, tolerance_db: float) -> dict:
+    """The loudness audit's expressions over audio_features columns
+    (``c(name)`` resolves one)."""
+    rms_db = F.lit(20.0) * F.log10(c("rms") / F.lit(_FULL_SCALE))
+    peak_db = F.lit(20.0) * F.log10(c("peak") / F.lit(_FULL_SCALE))
+    gain = F.lit(target_dbfs) - rms_db
+    headroom = -peak_db
+    bad = ~c("decode_ok") | c("rms").isNull() | F.isnan(c("rms")) | (c("rms") <= 0)
+    verdict = (
+        F.when(bad, F.lit("undecodable"))
+        .when(F.abs(gain) <= tolerance_db, F.lit("ok"))
+        .when((gain > 0) & (gain > headroom), F.lit("boost_clips"))
+        .when(gain > 0, F.lit("boost"))
+        .otherwise(F.lit("attenuate"))
+    )
+    vals = {"rms_dbfs": rms_db, "peak_dbfs": peak_db, "gain_db": gain, "headroom_db": headroom}
+    # null unless decodable, rounded like every audit output column
+    return {**{k: F.round(F.when(~bad, v), 6) for k, v in vals.items()}, "verdict": verdict}
 
 
 def loudness_audit(
@@ -881,33 +852,23 @@ def loudness_audit(
     - ``undecodable`` decode failed or the clip is digital silence (rms=0,
       dBFS undefined)
     """
-    rms_db = F.lit(20.0) * F.log10(F.col("rms") / F.lit(_FULL_SCALE))
-    peak_db = F.lit(20.0) * F.log10(F.col("peak") / F.lit(_FULL_SCALE))
-    gain = F.lit(target_dbfs) - rms_db
-    headroom = -peak_db
-    bad = (
-        ~F.col("decode_ok")
-        | F.col("rms").isNull()
-        | F.isnan("rms")
-        | (F.col("rms") <= 0)
-    )
-    verdict = (
-        F.when(bad, F.lit("undecodable"))
-        .when(F.abs(gain) <= tolerance_db, F.lit("ok"))
-        .when((gain > 0) & (gain > headroom), F.lit("boost_clips"))
-        .when(gain > 0, F.lit("boost"))
-        .otherwise(F.lit("attenuate"))
-    )
-    null_if_bad = lambda c: F.when(~bad, c)  # noqa: E731
-    return features.select(
-        "clip_id",
-        "part",
-        F.round(null_if_bad(rms_db), 6).alias("rms_dbfs"),
-        F.round(null_if_bad(peak_db), 6).alias("peak_dbfs"),
-        F.round(null_if_bad(gain), 6).alias("gain_db"),
-        F.round(null_if_bad(headroom), 6).alias("headroom_db"),
-        verdict.alias("verdict"),
-    )
+    cols = _loudness(F.col, target_dbfs, tolerance_db)
+    return features.select("clip_id", "part", *[e.alias(k) for k, e in cols.items()])
+
+
+def loudness_kernel(target_dbfs: float = -20.0, tolerance_db: float = 1.0) -> Kernel:
+    def flags(c):
+        a = _loudness(c, target_dbfs, tolerance_db)
+        detail = F.concat(
+            F.lit("gain_db="),
+            F.round(a["gain_db"], 2).cast("string"),
+            F.lit(" exceeds headroom_db="),
+            F.round(a["headroom_db"], 2).cast("string"),
+            F.lit(f" normalizing to {target_dbfs} dBFS would clip"),
+        )
+        return [(a["verdict"] == "boost_clips", "loudness", 3.0, detail)]
+
+    return _features_kernel(flags=flags)
 
 
 def loudness_violations(
@@ -923,36 +884,13 @@ def loudness_violations(
     pipeline. Undecodable clips are deliberately NOT re-reported here (the
     codec/payload checks own that defect; same no-double-count rule as
     speaking_rate). Severity 3.0: above referential orphans, below
-    uniqueness/payload corruption.
-
-    Cost note: this runs its own audio_features decode pass; enable it in a
-    suite that SKIPS the payload check, or accept a second decode of the
-    wave (the waves are checkpoint-bounded either way).
-    """
-    # audio_features/loudness_audit hardcode clip_id/part internally — map a
-    # custom key/part column onto those names first, so a spec with e.g.
-    # key_col="utt_id" resolves instead of failing UNRESOLVED_COLUMN
-    src = remap_key_part(clips, key_col, part_col)
-    audit = loudness_audit(audio_features(src), target_dbfs, tolerance_db)
-    bad = audit.where(F.col("verdict") == "boost_clips")
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("loudness").alias("check"),
-        F.concat(
-            F.lit("gain_db="),
-            F.round(F.col("gain_db"), 2).cast("string"),
-            F.lit(" exceeds headroom_db="),
-            F.round(F.col("headroom_db"), 2).cast("string"),
-            F.lit(f" normalizing to {target_dbfs} dBFS would clip"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.0).alias("severity"),
+    uniqueness/payload corruption."""
+    return decoded_violations(
+        clips, [loudness_kernel(target_dbfs, tolerance_db)], key_col=key_col, part_col=part_col
     )
 
 
-TRANSCODE_QA_SCHEMA = (
-    "clip_id string, part int, transcode_ok boolean, snr_db double, verdict string"
-)
+_TRANSCODE_FIELDS = "transcode_ok boolean, snr_db double, verdict string"
 
 # err == 0 (bit-exact round trip) would be +inf dB; cap so the column stays
 # a plain double for parquet/compare purposes
@@ -972,7 +910,7 @@ def transcode_qa(
     full scale saturate G.711's companding; already-quiet clips lose
     mantissa bits).
 
-    Same vectorization discipline as audio_features/payload: per-codec-group
+    A kernel of the shared decode pass (operators/payload.py): per-codec-group
     concatenated decode, ONE vectorized encode+decode of the concatenation
     (both G.711 kernels are samplewise-stateless, so concatenation is
     transparent), and per-clip SNR from two ``np.add.reduceat`` sums —
@@ -989,73 +927,39 @@ def transcode_qa(
     """
     stateful = target_codec in codecs.STATEFUL_TRANSCODE_CODECS
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
-            ok = np.zeros(n, dtype=bool)
-            snr = np.full(n, np.nan)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                ref = codecs.decode(
-                    b"".join(raw_col[i] for i in idx), codec
-                ).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                if stateful:
-                    rt = np.empty_like(ref)
-                    for k in range(idx.size):
-                        a, m = int(seg[k]), int(lens[k])
-                        dec = codecs.decode(
-                            codecs.encode(ref[a : a + m], target_codec),
-                            target_codec,
-                        )
-                        rt[a : a + m] = dec[:m]
-                else:
-                    rt = codecs.decode(
-                        codecs.encode(ref, target_codec), target_codec
-                    ).astype(np.float64)
-                sig = np.add.reduceat(ref * ref, seg)
-                err = np.add.reduceat((ref - rt) * (ref - rt), seg)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = 10.0 * np.log10(sig / err)
-                s = np.where(err <= 0, _SNR_CAP_DB, np.minimum(s, _SNR_CAP_DB))
-                # zero-signal clips: SNR undefined -> leave NaN, not ok
-                ok[idx] = sig > 0
-                snr[idx] = np.where(sig > 0, s, np.nan)
-            verdict = np.where(
-                ~ok,
-                "undecodable",
-                np.where(
-                    snr >= transparent_snr_db,
-                    "transparent",
-                    np.where(snr >= min_snr_db, "acceptable", "degraded"),
-                ),
-            )
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "transcode_ok": ok,
-                    "snr_db": np.round(snr, 6),
-                    "verdict": verdict,
-                }
-            )
+    def run(b: Batch) -> dict:
+        ok = np.zeros(b.n, dtype=bool)
+        snr = np.full(b.n, np.nan)
+        for g in b.clip_groups:
+            idx, lens, seg, ref = g.idx, g.lens, g.starts, g.f64
+            if stateful:
+                rt = np.empty_like(ref)
+                for k in range(idx.size):
+                    a, m = int(seg[k]), int(lens[k])
+                    dec = codecs.decode(codecs.encode(ref[a : a + m], target_codec), target_codec)
+                    rt[a : a + m] = dec[:m]
+            else:
+                rt = codecs.decode(codecs.encode(ref, target_codec), target_codec).astype(np.float64)
+            sig = np.add.reduceat(ref * ref, seg)
+            err = np.add.reduceat((ref - rt) * (ref - rt), seg)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                s = 10.0 * np.log10(sig / err)
+            s = np.where(err <= 0, _SNR_CAP_DB, np.minimum(s, _SNR_CAP_DB))
+            # zero-signal clips: SNR undefined -> leave NaN, not ok
+            ok[idx] = sig > 0
+            snr[idx] = np.where(sig > 0, s, np.nan)
+        verdict = np.where(
+            ~ok,
+            "undecodable",
+            np.where(
+                snr >= transparent_snr_db,
+                "transparent",
+                np.where(snr >= min_snr_db, "acceptable", "degraded"),
+            ),
+        )
+        return {"transcode_ok": ok, "snr_db": np.round(snr, 6), "verdict": verdict}
 
-    pruned = clips.select("clip_id", "part", "bytes", "codec")
-    return pruned.mapInPandas(batches, schema=TRANSCODE_QA_SCHEMA)
+    return decode_pass(clips, [Kernel("transcode", _TRANSCODE_FIELDS, run, inputs=())])
 
 
 def bandwidth_audit(
@@ -1115,14 +1019,12 @@ def bandwidth_audit(
         ),
     )
 
-
 # ---------------------------------------------------------------------------
 # interior dropouts (mid-clip digital-silence runs)
 # ---------------------------------------------------------------------------
 
-DROPOUT_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_dropouts int, "
-    "max_dropout_ms double, dropout_ms_total double"
+_DROPOUT_FIELDS = (
+    "decode_ok boolean, n_dropouts int, max_dropout_ms double, dropout_ms_total double"
 )
 
 # Digital-silence gate for dropout runs: above A-law's zero-code output
@@ -1132,6 +1034,71 @@ DROPOUT_AUDIT_SCHEMA = (
 # through ANY of the four codecs lands under this gate; quiet speech does
 # not.
 _DROPOUT_ZERO_EPS = 4e-4
+
+
+def _dropouts(b: Batch, min_run_ms: float, zero_eps: float) -> dict:
+    n = b.n
+    decode_ok = np.zeros(n, dtype=bool)
+    n_drop = np.zeros(n, dtype=np.int32)
+    max_ms = np.zeros(n, dtype=np.float64)
+    tot_ms = np.zeros(n, dtype=np.float64)
+    for g in b.clip_groups:
+        idx, lens, seg, pcm = g.idx, g.lens, g.starts, g.pcm
+        decode_ok[idx] = True
+        last = seg + lens - 1
+        # NaN payloads (pcm_f32le corruption) compare False and so
+        # terminate silence runs -- they are the payload check's job
+        m = np.abs(pcm) <= zero_eps
+        if not m.any():
+            continue
+        prev = np.empty_like(m)
+        prev[0] = False
+        prev[1:] = m[:-1]
+        prev[seg] = False  # a clip start always opens a fresh run
+        starts = np.flatnonzero(m & ~prev)
+        nxt = np.empty_like(m)
+        nxt[-1] = False
+        nxt[:-1] = m[1:]
+        nxt[last] = False  # a clip end always closes its run
+        ends = np.flatnonzero(m & ~nxt)
+        clip_of = np.searchsorted(seg, starts, side="right") - 1
+        srv = b.sr[idx].astype(np.float64)
+        run_ms = (ends - starts + 1).astype(np.float64) / np.maximum(srv[clip_of], 1.0) * 1000.0
+        # interior = strictly inside the clip; sr<=0 clips are the
+        # schema check's problem, not reportable in milliseconds
+        sel = (
+            (starts > seg[clip_of])
+            & (ends < last[clip_of])
+            & (run_ms >= min_run_ms)
+            & (srv[clip_of] > 0)
+        )
+        if not sel.any():
+            continue
+        tgt = idx[clip_of[sel]]
+        np.add.at(n_drop, tgt, 1)
+        np.add.at(tot_ms, tgt, run_ms[sel])
+        np.maximum.at(max_ms, tgt, run_ms[sel])
+    return {
+        "decode_ok": decode_ok,
+        "n_dropouts": n_drop,
+        "max_dropout_ms": np.where(decode_ok, max_ms, np.nan),
+        "dropout_ms_total": np.where(decode_ok, tot_ms, np.nan),
+    }
+
+
+def dropout_kernel(min_run_ms: float = 30.0, zero_eps: float = _DROPOUT_ZERO_EPS) -> Kernel:
+    detail = lambda c: F.concat(  # noqa: E731
+        F.lit("n_dropouts="),
+        c("n_dropouts").cast("string"),
+        F.lit(" max_dropout_ms="),
+        F.round(c("max_dropout_ms"), 1).cast("string"),
+    )
+    return Kernel(
+        "dropout",
+        _DROPOUT_FIELDS,
+        lambda b: _dropouts(b, min_run_ms, zero_eps),
+        flags=lambda c: [(c("n_dropouts") > 0, "dropout", 3.5, detail(c))],
+    )
 
 
 def dropout_audit(
@@ -1154,92 +1121,14 @@ def dropout_audit(
     Reference analogue: the per-event value-anomaly flags (SURVEY.md A10) —
     content-level corruption the schema/byte-length tiers cannot see.
 
-    Scale notes: same single ``mapInPandas`` decode pass as
-    ``audio_features`` (per-codec-group concatenated decode, no per-sample
-    Python). Run extraction is vectorized run-length encoding over the
-    concatenated silence mask with clip boundaries forced closed — runs
-    never merge across adjacent clips in a batch — and per-clip aggregation
-    runs over the (few) run records via ``np.add.at`` / ``np.maximum.at``,
-    never over samples.
+    Scale notes: a kernel of the shared decode pass, on the float32 decode
+    (no per-sample Python). Run extraction is vectorized run-length
+    encoding over the concatenated silence mask with clip boundaries forced
+    closed — runs never merge across adjacent clips in a batch — and
+    per-clip aggregation runs over the (few) run records via ``np.add.at``
+    / ``np.maximum.at``, never over samples.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
-            decode_ok = np.zeros(n, dtype=bool)
-            n_drop = np.zeros(n, dtype=np.int32)
-            max_ms = np.zeros(n, dtype=np.float64)
-            tot_ms = np.zeros(n, dtype=np.float64)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                decode_ok[idx] = True
-                last = seg + lens - 1
-                # NaN payloads (pcm_f32le corruption) compare False and so
-                # terminate silence runs -- they are the payload check's job
-                m = np.abs(pcm) <= zero_eps
-                if not m.any():
-                    continue
-                prev = np.empty_like(m)
-                prev[0] = False
-                prev[1:] = m[:-1]
-                prev[seg] = False  # a clip start always opens a fresh run
-                starts = np.flatnonzero(m & ~prev)
-                nxt = np.empty_like(m)
-                nxt[-1] = False
-                nxt[:-1] = m[1:]
-                nxt[last] = False  # a clip end always closes its run
-                ends = np.flatnonzero(m & ~nxt)
-                clip_of = np.searchsorted(seg, starts, side="right") - 1
-                srv = sr_col[idx].astype(np.float64)
-                run_ms = (
-                    (ends - starts + 1).astype(np.float64)
-                    / np.maximum(srv[clip_of], 1.0)
-                    * 1000.0
-                )
-                # interior = strictly inside the clip; sr<=0 clips are the
-                # schema check's problem, not reportable in milliseconds
-                sel = (
-                    (starts > seg[clip_of])
-                    & (ends < last[clip_of])
-                    & (run_ms >= min_run_ms)
-                    & (srv[clip_of] > 0)
-                )
-                if not sel.any():
-                    continue
-                tgt = idx[clip_of[sel]]
-                np.add.at(n_drop, tgt, 1)
-                np.add.at(tot_ms, tgt, run_ms[sel])
-                np.maximum.at(max_ms, tgt, run_ms[sel])
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_dropouts": n_drop,
-                    "max_dropout_ms": np.where(decode_ok, max_ms, np.nan),
-                    "dropout_ms_total": np.where(decode_ok, tot_ms, np.nan),
-                }
-            )
-
-    pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=DROPOUT_AUDIT_SCHEMA)
+    return decode_pass(clips, [dropout_kernel(min_run_ms, zero_eps)])
 
 
 def dropout_violations(
@@ -1253,26 +1142,9 @@ def dropout_violations(
     Undecodable clips are deliberately NOT re-reported (the codec/payload
     checks own that defect; same no-double-count rule as speaking_rate and
     loudness). Severity 3.5: content corruption — above loudness
-    feasibility (3.0), below payload SNR failures (4.0).
-
-    Cost note: runs its own audio decode pass; enable it in a suite that
-    SKIPS the payload check, or accept a second decode of the wave (the
-    waves are checkpoint-bounded either way).
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = dropout_audit(src, min_run_ms=min_run_ms)
-    bad = audit.where(F.col("n_dropouts") > 0)
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("dropout").alias("check"),
-        F.concat(
-            F.lit("n_dropouts="),
-            F.col("n_dropouts").cast("string"),
-            F.lit(" max_dropout_ms="),
-            F.round("max_dropout_ms", 1).cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.5).alias("severity"),
+    feasibility (3.0), below payload SNR failures (4.0)."""
+    return decoded_violations(
+        clips, [dropout_kernel(min_run_ms)], key_col=key_col, part_col=part_col
     )
 
 
@@ -1280,10 +1152,9 @@ def dropout_violations(
 # synthetic narrowband tones (test signals / IVR beeps / placeholder audio)
 # ---------------------------------------------------------------------------
 
-TONAL_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_used int, "
-    "spectral_flatness double, dominant_hz double, dominant_share double, "
-    "tonal boolean"
+_TONAL_FIELDS = (
+    "decode_ok boolean, n_used int, spectral_flatness double, dominant_hz double, "
+    "dominant_share double, tonal boolean"
 )
 
 # Hann-windowed spectral flatness (geometric mean / arithmetic mean of the
@@ -1301,6 +1172,106 @@ _TONAL_MIN_SAMPLES = 256
 # (~32 MB per temporary; with the gather + window + complex output the
 # transient peak stays ~150 MB per task instead of scaling with batch size)
 _FFT_CHUNK_ELEMS = 4_000_000
+
+
+def _tonal(
+    b: Batch,
+    flatness_threshold: float,
+    max_samples: int,
+    min_samples: int,
+    fft_chunk_elems: int,
+) -> dict:
+    n = b.n
+    decode_ok = np.zeros(n, dtype=bool)
+    n_used = np.zeros(n, dtype=np.int32)
+    flat = np.full(n, np.nan)
+    dom_hz = np.full(n, np.nan)
+    dom_share = np.full(n, np.nan)
+
+    def spectrum(P2, rows, m):
+        """Shared post-FFT math: P2 is (n_rows, nfft) power with the DC bin
+        already dropped; rows are batch row indices; m the analyzed sample
+        count. The batched and per-clip paths run the same per-row kernel,
+        so which path a clip took never changes its verdict."""
+        tot = P2.sum(axis=1)
+        ok = tot > 0.0
+        nb = P2.shape[1]
+        mean_p = tot / nb
+        with np.errstate(divide="ignore", invalid="ignore"):
+            # +mean*1e-12 floors exact-zero bins without moving the estimate
+            # (flatness floor 1e-12, far under threshold)
+            fl = np.exp(np.log(P2 + mean_p[:, None] * 1e-12).mean(axis=1)) / mean_p
+        bins = np.argmax(P2, axis=1) + 1
+        sel = rows[ok]
+        flat[sel] = fl[ok]
+        srv = b.sr[sel].astype(np.float64)
+        dom_hz[sel] = np.where(srv > 0, bins[ok] * srv / m, np.nan)
+        dom_share[sel] = P2[ok, bins[ok] - 1] / tot[ok]
+
+    m_full = int(max_samples)
+    win = np.hanning(m_full)
+    for g in b.clip_groups:
+        idx, lens, seg, pcm = g.idx, g.lens, g.starts, g.f64
+        decode_ok[idx] = True
+        full = np.flatnonzero(lens >= m_full)
+        if full.size:
+            # every capped clip analyzes exactly max_samples: a batched 2-D
+            # rfft replaces the per-clip Python loop — at corpus-typical
+            # durations (>= ~1 s) this path carries nearly all clips. Rows
+            # are processed in chunks bounded at _FFT_CHUNK_ELEMS elements:
+            # an unchunked 10k-clip Arrow batch would materialize ~650 MB
+            # per temporary (offsets, gather, window, complex FFT output)
+            # and OOM executors the per-clip paths handle fine (scoring.py
+            # _CHUNK_ELEMS pattern)
+            n_used[idx[full]] = m_full
+            rows_per = max(1, fft_chunk_elems // m_full)
+            for s0 in range(0, full.size, rows_per):
+                fc = full[s0 : s0 + rows_per]
+                X = pcm[seg[fc][:, None] + np.arange(m_full)]
+                rowfin = np.isfinite(X).all(axis=1)
+                if rowfin.any():
+                    P2 = np.abs(np.fft.rfft(X[rowfin] * win, axis=1)[:, 1:]) ** 2
+                    spectrum(P2, idx[fc[rowfin]], m_full)
+        # variable-length tail: per-clip FFT (bounded by max_samples)
+        for j in np.flatnonzero(lens < m_full):
+            i = idx[j]
+            m = int(lens[j])
+            n_used[i] = m
+            if m < min_samples:
+                continue  # too short for a stable spectrum: NaN, never tonal
+            x = pcm[seg[j] : seg[j] + m]
+            if not np.isfinite(x).all():
+                continue  # NaN payloads are the payload check's defect
+            p1 = np.abs(np.fft.rfft(x * np.hanning(m))[1:]) ** 2
+            spectrum(p1[None, :], np.array([i]), m)
+    return {
+        "decode_ok": decode_ok,
+        "n_used": n_used,
+        "spectral_flatness": flat,
+        "dominant_hz": dom_hz,
+        "dominant_share": dom_share,
+        "tonal": np.where(np.isnan(flat), False, flat < flatness_threshold),
+    }
+
+
+def tonal_kernel(
+    flatness_threshold: float = _TONAL_FLATNESS_THRESHOLD,
+    max_samples: int = 8192,
+    min_samples: int = _TONAL_MIN_SAMPLES,
+    fft_chunk_elems: int = _FFT_CHUNK_ELEMS,
+) -> Kernel:
+    detail = lambda c: F.concat(  # noqa: E731
+        F.lit("flatness="),
+        F.format_number(c("spectral_flatness"), 6),
+        F.lit(" dominant_hz="),
+        F.round(c("dominant_hz"), 1).cast("string"),
+    )
+    return Kernel(
+        "tonal",
+        _TONAL_FIELDS,
+        lambda b: _tonal(b, flatness_threshold, max_samples, min_samples, fft_chunk_elems),
+        flags=lambda c: [(c("tonal"), "tonal", 2.5, detail(c))],
+    )
 
 
 def tonal_audit(
@@ -1329,125 +1300,17 @@ def tonal_audit(
     ``dominant_share`` (that bin's power share), and the ``tonal`` verdict
     ``flatness < flatness_threshold``.
 
-    Scale notes: one ``mapInPandas`` pass, per-codec-group concatenated
-    decode like audio_features. The FFT is per clip but bounded: only the
-    first ``max_samples`` decoded samples are analyzed, so cost is
-    O(max_samples log max_samples) per clip regardless of duration — the
-    loop iterates per clip (one vectorized rfft each), never per sample.
-    Cost tier: its own decode pass, like codec_sniff — opt-in ingest-audit
-    check, not an every-run default.
+    Scale notes: a kernel of the shared decode pass. The FFT is per clip
+    but bounded: only the first ``max_samples`` decoded samples are
+    analyzed, so cost is O(max_samples log max_samples) per clip regardless
+    of duration — the loop iterates per clip (one vectorized rfft each),
+    never per sample.
 
     Exact oracle: tests/test_tonal.py (planted pure tones vs sine+noise
     corpus clips, per-codec, plus the q136 synth-fixture parity test).
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
-            decode_ok = np.zeros(n, dtype=bool)
-            n_used = np.zeros(n, dtype=np.int32)
-            flat = np.full(n, np.nan)
-            dom_hz = np.full(n, np.nan)
-            dom_share = np.full(n, np.nan)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(
-                    b"".join(raw_col[i] for i in idx), codec
-                ).astype(np.float64)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                decode_ok[idx] = True
-
-                def spectrum(P2, rows, m):
-                    """Shared post-FFT math: P2 is (n_rows, nfft) power with
-                    the DC bin already dropped; rows are global row indices;
-                    m the analyzed sample count. The batched and per-clip
-                    paths run the same per-row kernel, so which path a clip
-                    took never changes its verdict."""
-                    tot = P2.sum(axis=1)
-                    ok = tot > 0.0
-                    nb = P2.shape[1]
-                    mean_p = tot / nb
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        # +mean*1e-12 floors exact-zero bins without moving
-                        # the estimate (flatness floor 1e-12, far under
-                        # threshold)
-                        fl = (
-                            np.exp(np.log(P2 + mean_p[:, None] * 1e-12).mean(axis=1))
-                            / mean_p
-                        )
-                    b = np.argmax(P2, axis=1) + 1
-                    sel = rows[ok]
-                    flat[sel] = fl[ok]
-                    srv = sr_col[sel].astype(np.float64)
-                    dom_hz[sel] = np.where(srv > 0, b[ok] * srv / m, np.nan)
-                    dom_share[sel] = P2[ok, b[ok] - 1] / tot[ok]
-
-                m_full = int(max_samples)
-                full = np.flatnonzero(lens >= m_full)
-                if full.size:
-                    # every capped clip analyzes exactly max_samples: a
-                    # batched 2-D rfft replaces the per-clip Python loop —
-                    # at corpus-typical durations (>= ~1 s) this path
-                    # carries nearly all clips. Rows are processed in
-                    # chunks bounded at _FFT_CHUNK_ELEMS elements: an
-                    # unchunked 10k-clip Arrow batch would materialize
-                    # ~650 MB per temporary (offsets, gather, window,
-                    # complex FFT output) and OOM executors the per-clip
-                    # paths handle fine (scoring.py _CHUNK_ELEMS pattern)
-                    n_used[idx[full]] = m_full
-                    win = np.hanning(m_full)
-                    rows_per = max(1, fft_chunk_elems // m_full)
-                    for s0 in range(0, full.size, rows_per):
-                        fc = full[s0 : s0 + rows_per]
-                        offs = seg[fc][:, None] + np.arange(m_full)
-                        X = pcm[offs]
-                        rowfin = np.isfinite(X).all(axis=1)
-                        if rowfin.any():
-                            Xf = X[rowfin] * win
-                            P2 = np.abs(np.fft.rfft(Xf, axis=1)[:, 1:]) ** 2
-                            spectrum(P2, idx[fc[rowfin]], m_full)
-                # variable-length tail: per-clip FFT (bounded by max_samples)
-                for j in np.flatnonzero(lens < m_full):
-                    i = idx[j]
-                    m = int(lens[j])
-                    n_used[i] = m
-                    if m < min_samples:
-                        continue  # too short for a stable spectrum: NaN, never tonal
-                    x = pcm[seg[j] : seg[j] + m]
-                    if not np.isfinite(x).all():
-                        continue  # NaN payloads are the payload check's defect
-                    p1 = np.abs(np.fft.rfft(x * np.hanning(m))[1:]) ** 2
-                    spectrum(p1[None, :], np.array([i]), m)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_used": n_used,
-                    "spectral_flatness": flat,
-                    "dominant_hz": dom_hz,
-                    "dominant_share": dom_share,
-                    "tonal": np.where(np.isnan(flat), False, flat < flatness_threshold),
-                }
-            )
-
-    pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=TONAL_AUDIT_SCHEMA)
+    kernel = tonal_kernel(flatness_threshold, max_samples, min_samples, fft_chunk_elems)
+    return decode_pass(clips, [kernel])
 
 
 def tonal_violations(
@@ -1461,25 +1324,9 @@ def tonal_violations(
     clips are NOT re-reported (codec, payload and loudness checks own those
     defects — same no-double-count rule as dropout). Severity 2.5:
     content-provenance suspicion — below content corruption (dropout 3.5)
-    and loudness feasibility (3.0); the clip itself is technically sound.
-
-    Cost note: runs its own audio decode pass (bounded at ``max_samples``
-    per clip); ingest-audit tier like codec_sniff, not an every-run check.
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = tonal_audit(src, flatness_threshold=flatness_threshold)
-    bad = audit.where(F.col("tonal"))
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("tonal").alias("check"),
-        F.concat(
-            F.lit("flatness="),
-            F.format_number(F.col("spectral_flatness"), 6),
-            F.lit(" dominant_hz="),
-            F.round("dominant_hz", 1).cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(2.5).alias("severity"),
+    and loudness feasibility (3.0); the clip itself is technically sound."""
+    return decoded_violations(
+        clips, [tonal_kernel(flatness_threshold)], key_col=key_col, part_col=part_col
     )
 
 
@@ -1487,10 +1334,70 @@ def tonal_violations(
 # stutter: stuck-buffer / looped-frame repeats (non-silent dropout analogue)
 # ---------------------------------------------------------------------------
 
-STUTTER_AUDIT_SCHEMA = (
-    "clip_id string, part int, decode_ok boolean, n_stutters int, "
-    "max_repeat_frames int, stutter_ms_total double"
+_STUTTER_FIELDS = (
+    "decode_ok boolean, n_stutters int, max_repeat_frames int, stutter_ms_total double"
 )
+
+
+def _stutters(b: Batch, frame_ms: float, min_repeats: int, zero_eps: float) -> dict:
+    n = b.n
+    decode_ok = np.zeros(n, dtype=bool)
+    n_runs = np.zeros(n, dtype=np.int32)
+    max_rep = np.zeros(n, dtype=np.int32)
+    tot_ms = np.zeros(n, dtype=np.float64)
+    for g in b.clip_groups:
+        idx, lens, seg, pcm = g.idx, g.lens, g.starts, g.pcm
+        decode_ok[idx] = True
+        for j in range(idx.size):
+            i = idx[j]
+            sr = int(b.sr[i])
+            if sr <= 0:
+                continue  # schema's defect; ms math undefined
+            flen = max(1, int(round(sr * frame_ms / 1000.0)))
+            k = int(lens[j] // flen)
+            if k < min_repeats:
+                continue
+            fr = pcm[seg[j] : seg[j] + k * flen].reshape(k, flen)
+            # identical-to-previous, and not digital silence
+            eq = (fr[1:] == fr[:-1]).all(axis=1) & (np.abs(fr[1:]).max(axis=1) > zero_eps)
+            if not eq.any():
+                continue
+            # run-length over the eq booleans: a run of L Trues is L+1
+            # identical frames
+            e = np.empty(eq.size + 2, dtype=bool)
+            e[0] = e[-1] = False
+            e[1:-1] = eq
+            d = np.diff(e.astype(np.int8))
+            reps = (np.flatnonzero(d == -1) - np.flatnonzero(d == 1)) + 1  # frames per run
+            sel = reps >= min_repeats
+            if not sel.any():
+                continue
+            n_runs[i] = int(sel.sum())
+            max_rep[i] = int(reps[sel].max())
+            tot_ms[i] = float(reps[sel].sum()) * flen / sr * 1000.0
+    return {
+        "decode_ok": decode_ok,
+        "n_stutters": n_runs,
+        "max_repeat_frames": max_rep,
+        "stutter_ms_total": np.where(decode_ok, tot_ms, np.nan),
+    }
+
+
+def stutter_kernel(
+    frame_ms: float = 20.0, min_repeats: int = 3, zero_eps: float = _DROPOUT_ZERO_EPS
+) -> Kernel:
+    detail = lambda c: F.concat(  # noqa: E731
+        F.lit("n_stutters="),
+        c("n_stutters").cast("string"),
+        F.lit(" max_repeat_frames="),
+        c("max_repeat_frames").cast("string"),
+    )
+    return Kernel(
+        "stutter",
+        _STUTTER_FIELDS,
+        lambda b: _stutters(b, frame_ms, min_repeats, zero_eps),
+        flags=lambda c: [(c("n_stutters") > 0, "stutter", 3.5, detail(c))],
+    )
 
 
 def stutter_audit(
@@ -1515,88 +1422,17 @@ def stutter_audit(
     Reference analogue: the order-dependent per-group repeat scans
     (SURVEY.md W3/A11) — content-level corruption at frame grain.
 
-    Scale notes: one ``mapInPandas`` decode pass (per-codec-group
-    concatenated decode); per clip the work is one reshape to
-    (n_frames, frame_len) + one vectorized row-equality + run-length scan
-    over the (few) frame booleans — O(samples) total, never per-sample
-    Python. NaN samples (float-payload corruption) compare unequal and so
-    terminate runs — that defect belongs to the payload check.
+    Scale notes: a kernel of the shared decode pass, comparing the float32
+    decode; per clip the work is one reshape to (n_frames, frame_len) + one
+    vectorized row-equality + run-length scan over the (few) frame booleans
+    — O(samples) total, never per-sample Python. NaN samples (float-payload
+    corruption) compare unequal and so terminate runs — that defect belongs
+    to the payload check.
 
     Exact oracle: tests/test_stutter.py (planted frame repeats per codec,
     silence exclusion, boundary/run-length semantics).
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            n = len(pdf)
-            raw_col = pdf["bytes"].to_numpy()
-            codec_col = pdf["codec"].to_numpy()
-            sr_col = pdf["sr_hz"].to_numpy(dtype=np.int64)
-            byte_lens = np.array(
-                [len(r) if r is not None else -1 for r in raw_col], dtype=np.int64
-            )
-            decode_ok = np.zeros(n, dtype=bool)
-            n_runs = np.zeros(n, dtype=np.int32)
-            max_rep = np.zeros(n, dtype=np.int32)
-            tot_ms = np.zeros(n, dtype=np.float64)
-            for codec in pd.unique(codec_col):
-                if codec not in codecs.CODECS:
-                    continue
-                bps = codecs.bytes_per_sample(codec)
-                idx = np.flatnonzero(
-                    (codec_col == codec) & (byte_lens > 0) & (byte_lens % bps == 0)
-                )
-                if idx.size == 0:
-                    continue
-                lens = byte_lens[idx] // bps
-                pcm = codecs.decode(b"".join(raw_col[i] for i in idx), codec)
-                seg = np.zeros(idx.size, dtype=np.int64)
-                np.cumsum(lens[:-1], out=seg[1:])
-                decode_ok[idx] = True
-                for j in range(idx.size):
-                    i = idx[j]
-                    sr = int(sr_col[i])
-                    if sr <= 0:
-                        continue  # schema's defect; ms math undefined
-                    flen = max(1, int(round(sr * frame_ms / 1000.0)))
-                    k = int(lens[j] // flen)
-                    if k < min_repeats:
-                        continue
-                    fr = pcm[seg[j] : seg[j] + k * flen].reshape(k, flen)
-                    # identical-to-previous, and not digital silence
-                    eq = (fr[1:] == fr[:-1]).all(axis=1) & (
-                        np.abs(fr[1:]).max(axis=1) > zero_eps
-                    )
-                    if not eq.any():
-                        continue
-                    # run-length over the eq booleans: a run of L Trues is
-                    # L+1 identical frames
-                    e = np.empty(eq.size + 2, dtype=bool)
-                    e[0] = e[-1] = False
-                    e[1:-1] = eq
-                    d = np.diff(e.astype(np.int8))
-                    starts = np.flatnonzero(d == 1)
-                    ends = np.flatnonzero(d == -1)
-                    reps = (ends - starts) + 1  # frames per run
-                    sel = reps >= min_repeats
-                    if not sel.any():
-                        continue
-                    n_runs[i] = int(sel.sum())
-                    max_rep[i] = int(reps[sel].max())
-                    tot_ms[i] = float(reps[sel].sum()) * flen / sr * 1000.0
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].to_numpy(),
-                    "part": pdf["part"].to_numpy(),
-                    "decode_ok": decode_ok,
-                    "n_stutters": n_runs,
-                    "max_repeat_frames": max_rep,
-                    "stutter_ms_total": np.where(decode_ok, tot_ms, np.nan),
-                }
-            )
-
-    pruned = clips.select("clip_id", "part", "bytes", "codec", "sr_hz")
-    return pruned.mapInPandas(batches, schema=STUTTER_AUDIT_SCHEMA)
+    return decode_pass(clips, [stutter_kernel(frame_ms, min_repeats, zero_eps)])
 
 
 def stutter_violations(
@@ -1609,23 +1445,7 @@ def stutter_violations(
     """Suite adapter for ``stutter_audit``: violation rows for clips with
     at least one stuck-buffer frame-repeat run. Undecodable clips are NOT
     re-reported (codec/payload checks own that). Severity 3.5: content
-    corruption, same tier as dropout (the silent sibling).
-
-    Cost note: own decode pass — pair with a suite that skips payload, or
-    accept the second decode of the wave.
-    """
-    src = remap_key_part(clips, key_col, part_col)
-    audit = stutter_audit(src, frame_ms=frame_ms, min_repeats=min_repeats)
-    bad = audit.where(F.col("n_stutters") > 0)
-    return bad.select(
-        F.col("clip_id").alias("key"),
-        F.lit("stutter").alias("check"),
-        F.concat(
-            F.lit("n_stutters="),
-            F.col("n_stutters").cast("string"),
-            F.lit(" max_repeat_frames="),
-            F.col("max_repeat_frames").cast("string"),
-        ).alias("detail"),
-        F.col("part").alias("part"),
-        F.lit(3.5).alias("severity"),
+    corruption, same tier as dropout (the silent sibling)."""
+    return decoded_violations(
+        clips, [stutter_kernel(frame_ms, min_repeats)], key_col=key_col, part_col=part_col
     )

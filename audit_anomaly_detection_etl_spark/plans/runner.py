@@ -14,6 +14,12 @@ Execution model (SURVEY.md §7.1 steps 2+7):
 - within a wave, ALL checks compose into a single violations plan (union of
   lazy DataFrames over one cached scan) plus one metrics pass, so the clips
   table is read once per wave for the row-level checks.
+- the checks that read payload samples (payload, loudness, dropout,
+  codec_sniff, tonal, stutter) share ONE Python pass per wave
+  (``payload.decoded_violations``): the wave crosses into Python once,
+  left-joined to clips_ref once when payload is on, each codec group is
+  decoded once for every kernel, and the violations come from one explode
+  projection over the pass's wide row. The other checks stay Catalyst.
 
 Check decomposability: uniqueness and referential checks are run per-wave,
 which is correct when the table is bucket-partitioned by hash(clip_id)
@@ -110,27 +116,6 @@ def wave_violations(
                 wave_df, ref_df, key_col=spec.schema_spec.key_col, part_col=spec.schema_spec.part_col
             )
         )
-    if "payload" in checks and ref_df is not None:
-        src = wave_df
-        if spec.payload_sample is not None:
-            # deterministic key-hash sample for the decode-dominated pass
-            # (spec.payload_sample doc): independent of the table's crc32
-            # partition layout, stable across runs for a fixed salt, and
-            # pushed below the join so the ref side prunes with it
-            frac, salt = spec.payload_sample
-            src = wave_df.where(
-                F.pmod(
-                    F.xxhash64(
-                        F.concat(
-                            F.col(spec.schema_spec.key_col).cast("string"),
-                            F.lit(str(salt)),
-                        )
-                    ),
-                    F.lit(1_000_000),
-                )
-                < F.lit(int(round(frac * 1_000_000)))
-            )
-        parts.append(payload.payload_violations(payload.payload_report(src, ref_df)))
     if "speaking_rate" in checks:
         lo, hi = spec.speaking_rate_bounds
         parts.append(
@@ -171,51 +156,27 @@ def wave_violations(
                 part_col=spec.schema_spec.part_col,
             )
         )
+    # every check that reads payload samples shares ONE Python pass
+    kernels = []
+    if "payload" in checks and ref_df is not None:
+        kernels.append(payload.PAYLOAD_KERNEL)
     if "loudness" in checks:
-        target, tol = spec.loudness_bounds
-        parts.append(
-            media.loudness_violations(
-                wave_df,
-                target_dbfs=target,
-                tolerance_db=tol,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
+        kernels.append(media.loudness_kernel(*spec.loudness_bounds))
     if "dropout" in checks:
-        parts.append(
-            media.dropout_violations(
-                wave_df,
-                min_run_ms=spec.dropout_min_run_ms,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
+        kernels.append(media.dropout_kernel(spec.dropout_min_run_ms))
     if "codec_sniff" in checks:
-        parts.append(
-            payload.codec_sniff_violations(
-                wave_df,
-                ratio_threshold=spec.codec_sniff_ratio,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
+        kernels.append(payload.codec_sniff_kernel(spec.codec_sniff_ratio))
     if "tonal" in checks:
-        parts.append(
-            media.tonal_violations(
-                wave_df,
-                flatness_threshold=spec.tonal_flatness_threshold,
-                key_col=spec.schema_spec.key_col,
-                part_col=spec.schema_spec.part_col,
-            )
-        )
+        kernels.append(media.tonal_kernel(spec.tonal_flatness_threshold))
     if "stutter" in checks:
-        frame_ms, min_repeats = spec.stutter_params
+        kernels.append(media.stutter_kernel(*spec.stutter_params))
+    if kernels:
         parts.append(
-            media.stutter_violations(
+            payload.decoded_violations(
                 wave_df,
-                frame_ms=frame_ms,
-                min_repeats=min_repeats,
+                kernels,
+                ref_df,
+                spec.payload_sample,
                 key_col=spec.schema_spec.key_col,
                 part_col=spec.schema_spec.part_col,
             )

@@ -65,30 +65,29 @@ class SuiteSpec:
     # transcript<->audio plausibility bounds (words/sec); the check itself is
     # opt-in via checks=(..., "speaking_rate") — see media.speaking_rate_violations
     speaking_rate_bounds: tuple = (0.3, 6.0)
+    # The five audio checks below read payload samples: with payload they
+    # share the wave's one decode pass (payload.decoded_violations).
     # loudness-normalization feasibility (target dBFS, ok-tolerance dB);
     # opt-in via checks=(..., "loudness") — see media.loudness_violations.
-    # NOTE: runs its own decode pass; pair with a suite that skips payload
-    # or accept the second decode of the wave.
     loudness_bounds: tuple = (-20.0, 1.0)
     # interior-dropout detection (mid-clip digital-silence runs >= this many
     # ms — buffer underruns / network dropouts); opt-in via
-    # checks=(..., "dropout") — see media.dropout_violations. Same cost note
-    # as loudness: its own decode pass.
+    # checks=(..., "dropout") — see media.dropout_violations.
     dropout_min_run_ms: float = 30.0
     # mislabeled-codec sniff (declared-law decode noise-like while an
     # alternative decodes to plausible audio; catches ulaw<->alaw swaps
     # byte_length cannot see); opt-in via checks=(..., "codec_sniff") —
-    # see payload.codec_sniff_violations. Costs ~4x one decode pass:
-    # ingest-audit tier, not every run.
+    # see payload.codec_sniff_violations. Decodes each clip under every
+    # byte-length-consistent alternative law too (~3 extra decodes).
     codec_sniff_ratio: float = 3.0
     # synthetic narrowband-tone detection (Hann-windowed spectral flatness
     # under this threshold => machine-generated tone, not recorded audio);
-    # opt-in via checks=(..., "tonal") — see media.tonal_violations. Own
-    # decode pass (FFT bounded at 8192 samples/clip): ingest-audit tier.
+    # opt-in via checks=(..., "tonal") — see media.tonal_violations (FFT
+    # bounded at 8192 samples/clip).
     tonal_flatness_threshold: float = 2e-3
     # stuck-buffer detection (>= min_repeats bit-identical non-silent
     # frames of frame_ms each); opt-in via checks=(..., "stutter") — see
-    # media.stutter_violations. Own decode pass, same cost note as dropout.
+    # media.stutter_violations.
     stutter_params: tuple = (20.0, 3)
     # payload-check COST tier: the reference-comparison pass (decode + SNR
     # + transcript equality — the one check whose cost is dominated by

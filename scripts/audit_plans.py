@@ -630,13 +630,14 @@ def bucketed_payload_plans(spark) -> dict[str, str]:
         from audit_anomaly_detection_etl_spark.plans.spec import SuiteSpec
 
         spec = SuiteSpec()
-        wave_b = plan_of(wave_violations(cb, rb, spec, spec.checks))
-        wave_p = plan_of(wave_violations(clips, ref, spec, spec.checks))
+        audio = spec.checks + ("loudness", "dropout", "codec_sniff", "tonal", "stutter")
         return {
             "bucketed": bucketed,
             "parquet": parquet,
-            "wave_bucketed": wave_b,
-            "wave_parquet": wave_p,
+            "wave_bucketed": plan_of(wave_violations(cb, rb, spec, spec.checks)),
+            "wave_parquet": plan_of(wave_violations(clips, ref, spec, spec.checks)),
+            "wave_audio_bucketed": plan_of(wave_violations(cb, rb, spec, audio)),
+            "wave_audio_parquet": plan_of(wave_violations(clips, ref, spec, audio)),
         }
     finally:
         if old is None:
@@ -675,6 +676,19 @@ EXTRA_RULES = [
         "control: the same wave plan over plain parquet shuffles many times "
         "(proves the wave_bucketed rule is non-vacuous)",
         lambda p: _nodes(p, "Exchange") >= 6,
+    ),
+    (
+        "wave_audio_bucketed",
+        "default wave plan plus all five audio checks over bucketed tables: "
+        "every payload-reading check shares ONE mapInPandas (one decode of "
+        "the wave), still with ZERO shuffle Exchanges",
+        lambda p: _nodes(p, "MapInPandas") == 1 and _nodes(p, "Exchange") == 0,
+    ),
+    (
+        "wave_audio_parquet",
+        "control: the same plan over plain parquet keeps its one mapInPandas "
+        "and shuffles (proves the bucketed rule's zero is non-vacuous)",
+        lambda p: _nodes(p, "MapInPandas") == 1 and _nodes(p, "Exchange") >= 6,
     ),
 ]
 

@@ -142,6 +142,37 @@ def test_truncation_refused():
             decode_jpeg(raw[:cut])
 
 
+def _rgb_component_ids(raw: bytes) -> bytes:
+    """Relabel a 3-component frame's SOF and SOS component ids as 'R','G','B'."""
+    raw = bytearray(raw)
+    sof, sos = raw.find(b"\xff\xc0"), raw.find(b"\xff\xda")
+    for c in range(3):
+        raw[sof + 10 + 3 * c] = b"RGB"[c]  # marker, len, P, Y, X, Nf, then (C, HV, Tq)
+        raw[sos + 5 + 2 * c] = b"RGB"[c]  # marker, len, Ns, then (Cs, TdTa)
+    return bytes(raw)
+
+
+def _adobe_app14(raw: bytes, transform: int) -> bytes:
+    """Insert an Adobe APP14 segment with the given color transform after SOI."""
+    body = b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform)
+    return raw[:2] + b"\xff\xee" + struct.pack(">H", len(body) + 2) + body + raw[2:]
+
+
+def test_rgb_coded_frames_refused():
+    """Only YCbCr is converted to RGB: frames that declare RGB coding would
+    decode to wrong pixels, so they are refused; the YCbCr-marked variant
+    of the same bytes still decodes."""
+    raw = encode_jpeg(_smooth(16, 16, 3, seed=5))
+    with pytest.raises(JpegError, match="RGB-coded"):
+        decode_jpeg(_rgb_component_ids(raw))
+    with pytest.raises(JpegError, match="RGB-coded"):
+        decode_jpeg(_adobe_app14(raw, 0))
+    assert decode_jpeg(_adobe_app14(raw, 1)).shape == (16, 16, 3)
+    # a grayscale frame is unaffected by the Adobe flag
+    gray = encode_jpeg(_smooth(8, 8, 1, seed=6))
+    assert decode_jpeg(_adobe_app14(gray, 0)).shape == (8, 8, 1)
+
+
 def test_bad_magic_refused():
     with pytest.raises(JpegError, match="SOI"):
         decode_jpeg(b"NOPE" + b"\x00" * 100)

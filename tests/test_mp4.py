@@ -128,6 +128,28 @@ def test_spark_video_metadata_operator(spark):
     assert not got["v3"]["container_ok"]
 
 
+def _empty_tkhd_at_eof() -> bytes:
+    """A video trak whose tkhd box is empty and ends the file."""
+    mvhd = _box(b"mvhd", struct.pack(">B3xIIII", 0, 0, 0, 1000, 1000) + bytes(80))
+    hdlr = _box(b"hdlr", bytes(8) + b"vide" + bytes(13))
+    trak = _box(b"trak", _box(b"mdia", hdlr) + _box(b"tkhd", b""))
+    return _box(b"ftyp", b"isom" + bytes(4) + b"isom") + _box(b"moov", mvhd + trak)
+
+
+def test_empty_tkhd_at_eof_refused(spark):
+    """The tkhd version byte is read only after a length check: an empty
+    tkhd at EOF is a refused container, not an IndexError that kills the
+    executor task."""
+    from audit_anomaly_detection_etl_spark.operators.media import video_metadata
+
+    raw = _empty_tkhd_at_eof()
+    with pytest.raises(Mp4Error, match="empty tkhd"):
+        parse_mp4(raw)
+    df = spark.createDataFrame([("v", bytearray(raw))], "video_id string, bytes binary")
+    (row,) = video_metadata(df).collect()
+    assert not row["container_ok"] and row["parse_error"] == "empty tkhd"
+
+
 def test_q143_video_container_audit_exact_oracle(spark):
     """Exact oracle for the q143 catalog aggregate: the seeded fixture mix
     is deterministic, so the per-brand counts and duration stats are
